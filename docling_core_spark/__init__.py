@@ -17,9 +17,14 @@ Architecture (NOT a port — reference cited for semantic parity only):
   model/      plain-dict document model: flat item arrays + ref graph
   parse/      span-stream interpreter + DocTags string parser + OTSL
   serialize/  markdown / doctags / html / text / element-tree serializers
-  operators/  corpus-level ops: dedup, text-analysis, ANN, multimodal
+  corpus/     corpus-level ops: dedup, text-analysis, ANN, multimodal;
+              `corpus.materialize` is the one session-memoized persist
+              and `corpus.clear` unpersists every entry
+  ops/        ledger, media, outline and overlay operators
   streaming/  checkpoint ledger + structured-streaming entry
-  pipeline.py the end-to-end mapInPandas stage + Spark schemas
+  pipeline.py the end-to-end stage + Spark schemas; `pipeline.map_docs`
+              is the one per-document mapInPandas stage every
+              per-document operator runs through
 """
 
 __version__ = "0.1.0"

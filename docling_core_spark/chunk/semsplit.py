@@ -104,10 +104,13 @@ def semsplit_chunk(
             attached = piece
         if token_counter(attached) > chunk_size:
             flush()
-            out.extend(
-                semsplit_chunk(piece, chunk_size, token_counter,
-                               _depth + 1)
-            )
+            if len(piece) > 1:
+                out.extend(
+                    semsplit_chunk(piece, chunk_size, token_counter,
+                                   _depth + 1)
+                )
+            elif piece:
+                out.append(piece)  # one character: cannot split further
             if not ws and i < n - 1 and out:
                 # the splitter itself terminates the last sub-chunk if
                 # it still fits

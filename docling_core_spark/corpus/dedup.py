@@ -19,12 +19,10 @@ Every op has a DuckDB oracle generated from the same constants
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import constants as C, read_spread
+from . import constants as C, materialize, read_spread
 from .textstats import TOKENS_DUCK, TOKENS_SPARK, _h30_duck, _h30_spark
 
 # ---------------------------------------------------------------------------
@@ -79,52 +77,14 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.expr(_shingles_spark()).alias("sh"))
 
 
-# One persisted shingle table per (session, sf_dir): the in-session
-# analog of materializing the signature table to storage, which is what
-# a 100 TB run would do (compute shingles/signatures exactly once, then
-# band + verify from the materialized table). Memoizing also prevents
-# repeated calls from stacking fresh .persist() copies.
-_SHINGLE_CACHE: dict = {}
-# verified near-dup pairs, memoized per (session, sf_dir) like the
-# shingle table: the second table a production dedup run materializes —
-# downstream consumers (connected-component clustering, curation) read
-# it instead of re-running the LSH + Jaccard chain
-_PAIRS_CACHE: dict = {}
-# the cluster assignment (doc_id -> canonical), memoized likewise: the
-# keep/drop list IS the final artifact a dedup job writes to storage
-_CLUSTERS_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Unpersist + forget the memoized shingle/pairs tables. Dropping
-    dict entries WITHOUT unpersisting leaks the cached RDDs in the
-    executor storage pool — enough leaked copies push later persists
-    into eviction/spill (measured a 20x slowdown after two leaked fills
-    of a 16x-inflated corpus)."""
-    for cache in (_SHINGLE_CACHE, _PAIRS_CACHE, _CLUSTERS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # owning SparkContext already stopped
-        cache.clear()
-
-
 def _persisted_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(sparkContext): CPython can reuse an id after
-    # the old context is garbage-collected (see similarity._cache_key)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        df = _shingles_df(spark, sf_dir).persist()
-        # materialize EAGERLY: lazily-filled caches consumed by several
-        # branches of one job race to recompute the same partitions
-        # concurrently (measured 5x slowdown at 8 cores on a cold
-        # 16x-inflated corpus); one clean fill job removes the race —
-        # exactly the "materialize the signature table first" step a
-        # production run performs
-        df.count()
-        _SHINGLE_CACHE[key] = df
-    return _SHINGLE_CACHE[key]
+    """One persisted shingle table per (session, sf_dir): the in-session
+    analog of materializing the signature table to storage, which is
+    what a 100 TB run would do (compute shingles/signatures exactly
+    once, then band + verify from the materialized table)."""
+    return materialize(
+        spark, ("shingles", sf_dir), lambda: _shingles_df(spark, sf_dir)
+    )
 
 
 def _sig_from_shingles(sh: DataFrame) -> DataFrame:
@@ -278,12 +238,10 @@ def q_neardup_pairs(
     read it rather than re-running the chain.
     """
     if max_bucket == 0:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _PAIRS_CACHE:
-            df = _compute_neardup_pairs(spark, sf_dir, 0).persist()
-            df.count()  # eager fill, same reason as _persisted_shingles
-            _PAIRS_CACHE[key] = df
-        return _PAIRS_CACHE[key]
+        return materialize(
+            spark, ("neardup_pairs", sf_dir),
+            lambda: _compute_neardup_pairs(spark, sf_dir, 0),
+        )
     return _compute_neardup_pairs(spark, sf_dir, max_bucket)
 
 
@@ -534,43 +492,34 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data extension surface); semantics follow the standard
     MinHash-LSH dedup recipe (Broder '97; GPL-free public description).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CLUSTERS_CACHE:
-        return _CLUSTERS_CACHE[key]
+    return materialize(
+        spark, ("dedup_clusters", sf_dir),
+        lambda: _dedup_clusters(spark, sf_dir),
+    )
+
+
+def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_neardup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     labels = _min_label_components(docs, pairs)
     sizes = labels.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )
-    out = (
-        labels.join(sizes, "cluster_id")
-        .select(
-            "doc_id",
-            "cluster_id",
-            "cluster_size",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-        .persist()
+    return labels.join(sizes, "cluster_id").select(
+        "doc_id",
+        "cluster_id",
+        "cluster_size",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
-    out.count()
-    _CLUSTERS_CACHE[key] = out
-    return out
 
 
-def _min_label_components(
-    docs: DataFrame, pairs: DataFrame,
-    stats: Optional[dict] = None,
-    local_edge_limit: Optional[int] = None,
-) -> DataFrame:
+def _min_label_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Fixpoint min-label propagation: (doc_id) nodes + (doc_a, doc_b)
     undirected edges -> (doc_id, cluster_id) where cluster_id is the
     minimum doc_id in the node's connected component.
 
-    `stats`, when given, receives n_pairs / path / loop_partitions /
-    rounds (tools/skew_dedup_demo.py uses it to evidence convergence on
-    adversarial chain graphs); `local_edge_limit` overrides
-    CC_LOCAL_EDGE_LIMIT (0 forces the iterative pointer-jumping path).
+    Convergence on adversarial chain graphs is recorded in SCALE.md
+    ("Adversarial skewed-corpus dedup at sf1 scale").
 
     Only nodes that appear in an edge enter the loop: a node with no
     near-duplicate is trivially its own component (label(v) = v), so
@@ -589,20 +538,12 @@ def _min_label_components(
     # corpus-sized and must use the normal width.
     sess = docs.sparkSession
     n_pairs = pairs.count()
-    limit = (
-        C.CC_LOCAL_EDGE_LIMIT if local_edge_limit is None
-        else local_edge_limit
-    )
-    if stats is not None:
-        stats["n_pairs"] = n_pairs
-    if n_pairs <= limit:
+    if n_pairs <= C.CC_LOCAL_EDGE_LIMIT:
         # the contracted graph fits in one task: finish locally — the
         # standard last step of the MapReduce CC algorithms (Kiveris et
         # al., SoCC'14). One shuffle of the EDGE LIST (not the corpus)
         # to a single task, union-find there, stitch singletons back
         # with the same corpus-width left join as the iterative path.
-        if stats is not None:
-            stats["path"] = "local_union_find"
         labels = _local_components(pairs)
         return docs.join(labels, "doc_id", "left").select(
             "doc_id",
@@ -615,9 +556,6 @@ def _min_label_components(
             (2 * n_pairs) // 100_000 + 1,
         ),
     )
-    if stats is not None:
-        stats["path"] = "pointer_jumping"
-        stats["loop_partitions"] = loop_p
     old_sp = sess.conf.get("spark.sql.shuffle.partitions")
     sess.conf.set("spark.sql.shuffle.partitions", str(loop_p))
     edges = None
@@ -634,7 +572,7 @@ def _min_label_components(
             .persist()
         )
         edges.count()
-        labels = _propagate_labels(edges, stats)
+        labels = _propagate_labels(edges)
     finally:
         sess.conf.set("spark.sql.shuffle.partitions", old_sp)
         # inside finally: a _propagate_labels raise (CC_MAX_ROUNDS)
@@ -693,9 +631,7 @@ def _local_components(pairs: DataFrame) -> DataFrame:
     return pairs.repartition(1).mapInPandas(uf, schema)
 
 
-def _propagate_labels(
-    edges: DataFrame, stats: Optional[dict] = None
-) -> DataFrame:
+def _propagate_labels(edges: DataFrame) -> DataFrame:
     labels = (
         edges.select("doc_a")
         .distinct()
@@ -757,8 +693,6 @@ def _propagate_labels(
         labels = nxt.select(
             "doc_id", F.col("new_cid").alias("cluster_id")
         )
-        if stats is not None:
-            stats["rounds"] = stats.get("rounds", 0) + 1
         if changed == 0:
             break
     else:
@@ -2750,17 +2684,14 @@ def q_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r")
     ).select(F.col("r.doc_id").alias("doc_id"), F.col("r.text").alias("text"))
     # the augmented shingle table fans into FOUR plan branches (two
-    # band sides + both verify joins); memoize-persist it in the same
-    # cache clear_caches() manages, or the corpus-wide
-    # tokenize+shingle subtree is recomputed per branch
-    key = (spark.sparkContext.applicationId, sf_dir, "fuzzy_aug")
-    if key not in _SHINGLE_CACHE:
-        df = aug.select(
+    # band sides + both verify joins); materialize it, or the
+    # corpus-wide tokenize+shingle subtree is recomputed per branch
+    sh = materialize(
+        spark, ("fuzzy_aug_shingles", sf_dir),
+        lambda: aug.select(
             "doc_id", F.expr(TOKENS_SPARK).alias("toks")
-        ).select("doc_id", F.expr(_shingles_spark()).alias("sh")).persist()
-        df.count()
-        _SHINGLE_CACHE[key] = df
-    sh = _SHINGLE_CACHE[key]
+        ).select("doc_id", F.expr(_shingles_spark()).alias("sh")),
+    )
     bands = _bands_from_sig(_sig_from_shingles(sh))
     tr_b = bands.where(f"NOT ({ev_pred})")
     ev_b = bands.where(ev_pred)

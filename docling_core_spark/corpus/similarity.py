@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import constants as C, read_spread
+from . import constants as C, materialize, read_spread
 
 # ---------------------------------------------------------------------------
 # expression fragments
@@ -126,9 +126,14 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
-        spark, sf_dir, "res_knn",
-        joined.withColumn("rnk", F.row_number().over(w))
+    # Search RESULT tables (queries x top-K rows — tiny) are materialized:
+    # production stores each ranking once and evaluates recall and
+    # monitoring queries against the stored table. Without it every
+    # recall query re-runs the full searcher chain per consumer —
+    # measured 12.2 s ann_recall / 9.4 s pq_recall at sf0.1.
+    return materialize(
+        spark, ("res_knn", sf_dir),
+        lambda: joined.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.KNN_K)
         .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
                 "cos_sim"),
@@ -160,46 +165,6 @@ def sql_knn_bruteforce() -> str:
 # LSH bucket assignment (banded)
 # ---------------------------------------------------------------------------
 
-_BANDED_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Unpersist + forget the memoized banded/IVF tables (same leak
-    discipline as dedup.clear_caches: dropping dict entries WITHOUT
-    unpersisting strands the cached RDDs in the executor storage pool)."""
-    for df in _BANDED_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning SparkContext already stopped
-    _BANDED_CACHE.clear()
-
-
-def _memo_result(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame
-) -> DataFrame:
-    """Session-memoize a SEARCH RESULT table (queries x top-K rows —
-    tiny). Production materializes each ranking once and evaluates
-    recall/monitoring queries against the stored table; the persist is
-    the in-query analog (same discipline as the shingle/pair tables in
-    dedup.py). Without it every recall query re-runs the full searcher
-    chain per consumer — measured 12.2 s ann_recall / 9.4 s pq_recall
-    at sf0.1 from exactly that re-evaluation."""
-    key = _cache_key(spark, sf_dir, name)
-    if key not in _BANDED_CACHE:
-        out = df.persist()
-        out.count()
-        _BANDED_CACHE[key] = out
-    return _BANDED_CACHE[key]
-
-
-def _cache_key(spark: SparkSession, *parts):
-    # applicationId, not id(sparkContext): CPython can reuse an id after
-    # the old context is garbage-collected, which would hand a later
-    # session a DataFrame bound to a stopped context.
-    return (spark.sparkContext.applicationId, *parts)
-
-
 def _emb_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE persisted row per vector: (vec_id, emb, nrm, buckets) where
     `buckets` is the full EMB_BANDS-bucket LSH signature computed by
@@ -210,19 +175,16 @@ def _emb_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~4.4 GB at sf0.1); the executor-storage pressure slowed every
     later query sharing the JVM. Persisted once per (session, sf) — at
     production scale this is the materialized signature table."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _BANDED_CACHE:
-        e = _emb_df(spark, sf_dir)
-        bucket_arr = ", ".join(
-            _band_bucket_spark(b) for b in range(C.EMB_BANDS)
-        )
-        df = e.select(
+    bucket_arr = ", ".join(
+        _band_bucket_spark(b) for b in range(C.EMB_BANDS)
+    )
+    return materialize(
+        spark, ("emb_banded", sf_dir),
+        lambda: _emb_df(spark, sf_dir).select(
             "vec_id", "emb", "nrm",
             F.expr(f"array({bucket_arr})").alias("buckets"),
-        ).persist()
-        df.count()  # eager fill (see dedup._persisted_shingles)
-        _BANDED_CACHE[key] = df
-    return _BANDED_CACHE[key]
+        ),
+    )
 
 
 def _banded_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,9 +285,9 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
-        spark, sf_dir, "res_lsh_topk",
-        joined.withColumn("rnk", F.row_number().over(w))
+    return materialize(
+        spark, ("res_lsh_topk", sf_dir),
+        lambda: joined.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.ANN_K)
         .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
                 "cos_sim"),
@@ -413,9 +375,9 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
-        spark, sf_dir, "res_lsh_mp",
-        joined.withColumn("rnk", F.row_number().over(w))
+    return materialize(
+        spark, ("res_lsh_mp", sf_dir),
+        lambda: joined.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.ANN_K)
         .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
                 "cos_sim"),
@@ -572,10 +534,50 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)["centroids"]
-    key = _cache_key(spark, sf_dir, "ivf_centroids")
-    if key not in _BANDED_CACHE:
-        _BANDED_CACHE[key] = compute_ivf_centroids(spark, sf_dir)
-    return _BANDED_CACHE[key]
+    return materialize(
+        spark, ("ivf_centroids", sf_dir),
+        lambda: compute_ivf_centroids(spark, sf_dir),
+    )
+
+
+def _ivf_ranked_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, crnk): each vector's IVF_NPROBE max-cosine cells.
+    Both the cell assignment and the probe list derive from this
+    ranking; it is materialized so the centroid-scoring cross join runs
+    once (at production scale this is the materialized assignment
+    table). It holds ONLY the nprobe-truncated id triples — round 2
+    persisted the full n x K ranking WITH the 64-dim embeddings (~9 GB
+    at sf0.1), and that storage pressure slowed every query sharing the
+    executor; embeddings re-join from the cached signature table at
+    candidate scale instead."""
+    from pyspark.sql.window import Window
+
+    def build() -> DataFrame:
+        cents = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
+            "c_id int, c_emb array<double>",
+        ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
+        scored = (
+            _cached_emb(spark, sf_dir).alias("s")
+            .crossJoin(F.broadcast(cents))
+            .select(
+                "s.vec_id", "c_id",
+                F.expr(
+                    f"round({_dot_spark('s.emb', 'c_emb')}"
+                    f" / (s.nrm * c_nrm), 6)"
+                ).alias("c_cos"),
+            )
+        )
+        wc = Window.partitionBy("vec_id").orderBy(
+            F.col("c_cos").desc(), F.col("c_id")
+        )
+        return (
+            scored.withColumn("crnk", F.row_number().over(wc))
+            .filter(F.col("crnk") <= IVF_NPROBE)
+            .select("vec_id", F.col("c_id").alias("cell"), "crnk")
+        )
+
+    return materialize(spark, ("ivf_ranked", sf_dir), build)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,44 +591,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = _cached_emb(spark, sf_dir)
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
-        "c_id int, c_emb array<double>",
-    ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
-    scored = (
-        e.alias("s")
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "s.vec_id", "c_id",
-            F.expr(
-                f"round({_dot_spark('s.emb', 'c_emb')}"
-                f" / (s.nrm * c_nrm), 6)"
-            ).alias("c_cos"),
-        )
-    )
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("c_cos").desc(), F.col("c_id")
-    )
-    # both the cell assignment and the probe list derive from this
-    # ranking; persist so the centroid-scoring cross join runs once
-    # (at production scale this is the materialized assignment table).
-    # Persist ONLY the nprobe-truncated id triples — round 2 persisted
-    # the full n x K ranking WITH the 64-dim embeddings (~9 GB at
-    # sf0.1), and that storage pressure slowed every query sharing the
-    # executor; embeddings re-join from the cached signature table at
-    # candidate scale instead. Memoized per (session, sf): repeated
-    # calls must not stack persisted copies.
-    ckey = _cache_key(spark, sf_dir, "ivf_ranked")
-    if ckey not in _BANDED_CACHE:
-        rc = (
-            scored.withColumn("crnk", F.row_number().over(wc))
-            .filter(F.col("crnk") <= IVF_NPROBE)
-            .select("vec_id", F.col("c_id").alias("cell"), "crnk")
-            .persist()
-        )
-        rc.count()  # eager fill (see dedup._persisted_shingles)
-        _BANDED_CACHE[ckey] = rc
-    ranked_cells = _BANDED_CACHE[ckey]
+    ranked_cells = _ivf_ranked_cells(spark, sf_dir)
     assigned = ranked_cells.filter(F.col("crnk") == 1).select(
         "vec_id", "cell"
     )
@@ -659,9 +624,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
-        spark, sf_dir, "res_ivf_topk",
-        joined.withColumn("rnk", F.row_number().over(w))
+    return materialize(
+        spark, ("res_ivf_topk", sf_dir),
+        lambda: joined.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.ANN_K)
         .select(
             "q_id", "cell", "neighbor_id", F.col("rnk").alias("rank"),
@@ -761,15 +726,12 @@ def q_neardup_cosine(
     full pre-verification candidate set (round-2 VERDICT "What's wrong
     #2")."""
     if max_bucket == 0:
-        # memoize the verified-pairs table per session (same rationale
-        # as dedup._PAIRS_CACHE: it is the artifact a production run
-        # materializes; semdedup clustering re-reads it)
-        key = _cache_key(spark, "cos_pairs", sf_dir)
-        if key not in _BANDED_CACHE:
-            df = _compute_neardup_cosine(spark, sf_dir, 0).persist()
-            df.count()
-            _BANDED_CACHE[key] = df
-        return _BANDED_CACHE[key]
+        # the verified-pairs table is the artifact a production run
+        # materializes; semdedup clustering re-reads it
+        return materialize(
+            spark, ("cos_pairs", sf_dir),
+            lambda: _compute_neardup_cosine(spark, sf_dir, 0),
+        )
     return _compute_neardup_cosine(spark, sf_dir, max_bucket)
 
 
@@ -848,11 +810,15 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton clusters. Semantics follow the public SemDeDup recipe
     (Abbas et al. 2023: embed -> near-dup pairs -> components -> keep
     one per component), re-expressed as DataFrame ops."""
+    return materialize(
+        spark, ("sem_clusters", sf_dir),
+        lambda: _semdedup_clusters(spark, sf_dir),
+    )
+
+
+def _semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _min_label_components
 
-    key = _cache_key(spark, "sem_clusters", sf_dir)
-    if key in _BANDED_CACHE:
-        return _BANDED_CACHE[key]
     pairs = q_neardup_cosine(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
@@ -863,19 +829,12 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = labels.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )
-    out = (
-        labels.join(sizes, "cluster_id")
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            "cluster_id",
-            "cluster_size",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-        .persist()
+    return labels.join(sizes, "cluster_id").select(
+        F.col("doc_id").alias("vec_id"),
+        "cluster_id",
+        "cluster_size",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
-    out.count()
-    _BANDED_CACHE[key] = out
-    return out
 
 
 def sql_semdedup_clusters() -> str:
@@ -1274,10 +1233,10 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)["codebooks"]
-    key = _cache_key(spark, sf_dir, "pq_codebooks")
-    if key not in _BANDED_CACHE:
-        _BANDED_CACHE[key] = compute_pq_codebooks(spark, sf_dir)
-    return _BANDED_CACHE[key]
+    return materialize(
+        spark, ("pq_codebooks", sf_dir),
+        lambda: compute_pq_codebooks(spark, sf_dir),
+    )
 
 
 def _pq_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,43 +1260,37 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a (vec_id, m)-partitioned window over PQ_KS rows per subvector —
     scan-shaped, no corpus shuffle. The emitted code table is the
     4-bytes-per-vector index a production deployment materializes — so
-    the engine memoizes it per session (persist in _BANDED_CACHE, the
-    in-query analog of that materialization): pq_search, ivfpq_search
-    and pq_recall all consume it, and without the pin each consumer
-    re-runs the encode window over the corpus."""
+    the engine materializes it per session: pq_search, ivfpq_search and
+    pq_recall all consume it, and without the pin each consumer re-runs
+    the encode window over the corpus."""
     from pyspark.sql.window import Window
 
-    ckey = _cache_key(spark, sf_dir, "pq_codes")
-    if ckey in _BANDED_CACHE:
-        return _BANDED_CACHE[ckey]
-    e = _cached_emb(spark, sf_dir).select(
-        "vec_id", F.col("emb")
-    )
-    subs = _pq_subvecs(e)
-    w = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("d").asc(), F.col("c_id").asc()
-    )
-    codes = (
-        subs.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
-        .select(
-            "vec_id", "m", "c_id",
-            F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
+    def build() -> DataFrame:
+        subs = _pq_subvecs(
+            _cached_emb(spark, sf_dir).select("vec_id", F.col("emb"))
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            F.col("m").cast("bigint").alias("m"),
-            F.col("c_id").cast("bigint").alias("code"),
-            F.expr("cast(round(d * 1000000) as bigint)").alias(
-                "qerr_micro"
-            ),
+        w = Window.partitionBy("vec_id", "m").orderBy(
+            F.col("d").asc(), F.col("c_id").asc()
         )
-        .persist()
-    )
-    codes.count()  # eager fill (materialized-index analog)
-    _BANDED_CACHE[ckey] = codes
-    return codes
+        return (
+            subs.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
+            .select(
+                "vec_id", "m", "c_id",
+                F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
+            )
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                F.col("vec_id").cast("bigint").alias("vec_id"),
+                F.col("m").cast("bigint").alias("m"),
+                F.col("c_id").cast("bigint").alias("code"),
+                F.expr("cast(round(d * 1000000) as bigint)").alias(
+                    "qerr_micro"
+                ),
+            )
+        )
+
+    return materialize(spark, ("pq_codes", sf_dir), build)
 
 
 def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1379,9 +1332,9 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc_micro").asc(), F.col("vec_id").asc()
     )
-    return _memo_result(
-        spark, sf_dir, "res_pq_search",
-        scored.withColumn("rnk", F.row_number().over(w))
+    return materialize(
+        spark, ("res_pq_search", sf_dir),
+        lambda: scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.KNN_K)
         .select(
             "q_id",
@@ -1504,11 +1457,7 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate (q_id, vec_id) pairs via the IVF cell machinery
     # (same memoized ranking q_ann_ivf_topk materializes)
     e = _cached_emb(spark, sf_dir)
-    ckey = _cache_key(spark, sf_dir, "ivf_ranked")
-    if ckey not in _BANDED_CACHE:
-        # build it through the IVF query's own path
-        q_ann_ivf_topk(spark, sf_dir)
-    ranked_cells = _BANDED_CACHE[ckey]
+    ranked_cells = _ivf_ranked_cells(spark, sf_dir)
     assigned = ranked_cells.filter(F.col("crnk") == 1).select(
         "vec_id", "cell"
     )
@@ -1544,9 +1493,9 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc_micro").asc(), F.col("vec_id").asc()
     )
-    return _memo_result(
-        spark, sf_dir, "res_ivfpq_search",
-        scored.withColumn("rnk", F.row_number().over(w))
+    return materialize(
+        spark, ("res_ivfpq_search", sf_dir),
+        lambda: scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= C.KNN_K)
         .select(
             "q_id",

@@ -919,9 +919,9 @@ def q_texttiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushed below the tiling projections and INLINES the whole chain —
     # re-splitting the document per tile, O(tokens^2) per row (measured
     # 16 s -> 0.36 s at 1,000-token docs on a fixed 200k-token budget;
-    # tools/longdoc_stress.py carries the sweep). The rule skips outer
-    # generates, and the null filter on the generator OUTPUT cannot be
-    # pushed below the Generate.
+    # SCALE.md "Loop-invariant hoisting" has the sweep). The rule skips
+    # outer generates, and the null filter on the generator OUTPUT cannot
+    # be pushed below the Generate.
     return simmed.select(
         "doc_id",
         F.col("m").cast("bigint").alias("n_tiles"),

@@ -42,7 +42,7 @@ flatten, DuckDB over the reference-derived golden — so a divergence in
 either the item tree, the reading order, the provenance geometry, or
 the SVG assembly fails the md5 row.
 
-100 TB story: the flatten is one Arrow-batched mapInPandas stage
+100 TB story: the flatten is one Arrow-batched `map_docs` stage
 (per-doc work, no shuffle); the SVG assembly is one groupBy
 (doc_id, page_no) over narrow int columns — a fine-grained, naturally
 uniform key (a page holds bounded items) — plus one window
@@ -54,15 +54,16 @@ lag() partitioned by the same doc_id key for the arrow chain. Only
 from __future__ import annotations
 
 import random
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..corpus import materialize
 from ..fixtures import _seed, _words
 from ..model import doc as D
 from ..model import labels as L
 from ..pages import _fmt2_sql
+from ..pipeline import map_docs
 
 # reference DocItemLabel.get_color (labels.py:45-69), restricted to the
 # labels the layout corpus generator can emit
@@ -271,47 +272,26 @@ def layout_doc_ids(n: int) -> List[str]:
     return [f"lay-{i:08d}" for i in range(n)]
 
 
-# Per-(app, n_docs) memo of the parsed flattens: the two overlay gate
-# rows and best-of-2 bench attempts would otherwise re-run the Python
-# doctags parse over the whole corpus per call (the session-memoized
-# result-table pattern of corpus/dedup.py's shingle tables). Dropped
-# WITHOUT unpersist on clear — freeing under a live consumer breaks it.
-_LAYOUT_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    _LAYOUT_CACHE.clear()
-
-
-def _memo_df(spark: SparkSession, tag: str, n_docs: int, build):
-    key = (spark.sparkContext.applicationId, tag, n_docs)
-    if key not in _LAYOUT_CACHE:
-        df = build().persist()
-        df.count()
-        _LAYOUT_CACHE[key] = df
-    return _LAYOUT_CACHE[key]
+def _flatten_df(spark: SparkSession, tag: str, n_docs: int,
+                partitions: int, flatten, schema: str) -> DataFrame:
+    """Distributed flatten: spark.range -> one Arrow stage per batch of
+    ids (embarrassingly parallel, zero shuffle). Materialized per (app,
+    n_docs): the two overlay gate rows and best-of-2 bench attempts would
+    otherwise re-run the Python doctags parse over the whole corpus per
+    call."""
+    return materialize(
+        spark, (tag, n_docs),
+        lambda: map_docs(
+            spark.range(n_docs).repartition(partitions),
+            lambda i: flatten(f"lay-{int(i):08d}"), schema, cols=("id",),
+        ),
+    )
 
 
 def doc_items_df(spark: SparkSession, n_docs: int,
                  partitions: int = 32) -> DataFrame:
-    """Distributed flatten: spark.range -> one Arrow stage per batch of
-    ids (embarrassingly parallel, zero shuffle); memoized per app+size."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_no", "rank", "layer", "label",
-                "x0", "y0", "x1", "y1"]
-        for pdf in batches:
-            out: List[dict] = []
-            for i in pdf["id"]:
-                out.extend(flatten_doc_id(f"lay-{int(i):08d}"))
-            yield pd.DataFrame(out, columns=cols)
-
-    return _memo_df(
-        spark, "items", n_docs,
-        lambda: spark.range(n_docs)
-        .repartition(partitions)
-        .mapInPandas(gen, schema=ITEM_SCHEMA),
-    )
+    return _flatten_df(spark, "overlay_items", n_docs, partitions,
+                       flatten_doc_id, ITEM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -549,21 +529,8 @@ def flatten_table_cells_doc_id(doc_id: str) -> List[dict]:
 
 def table_cells_df(spark: SparkSession, n_docs: int,
                    partitions: int = 32) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_no", "t_rank", "cell_index",
-                "x0", "y0", "x1", "y1"]
-        for pdf in batches:
-            out: List[dict] = []
-            for i in pdf["id"]:
-                out.extend(flatten_table_cells_doc_id(f"lay-{int(i):08d}"))
-            yield pd.DataFrame(out, columns=cols)
-
-    return _memo_df(
-        spark, "cells", n_docs,
-        lambda: spark.range(n_docs)
-        .repartition(partitions)
-        .mapInPandas(gen, schema=TABLE_CELL_SCHEMA),
-    )
+    return _flatten_df(spark, "overlay_cells", n_docs, partitions,
+                       flatten_table_cells_doc_id, TABLE_CELL_SCHEMA)
 
 
 def table_cells_svg_sql(src: str, dialect: str = "spark") -> str:

@@ -17,12 +17,13 @@ Design for 10^12-doc scale (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional, Sequence, Union
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 from . import schema as S
 from .model import doc as D
@@ -33,6 +34,32 @@ from .serialize.etree import export_to_element_tree
 from .serialize.html import export_to_html
 from .serialize.markdown import serialize_markdown
 from .serialize.spanseq import span_seq_from_result
+
+
+def map_docs(
+    df: DataFrame,
+    fn: Callable[..., list],
+    schema: Union[StructType, str],
+    cols: Sequence[str] = ("doc_id", "spans"),
+) -> DataFrame:
+    """The engine's one per-document Arrow stage: `fn(*row)` runs once
+    per input row of `cols` and returns that row's output rows (dicts),
+    which are flattened into each batch's output frame. The output
+    column order is derived from `schema` once, on the driver."""
+    names = [
+        f.name for f in (
+            DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        ).fields
+    ]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list = []
+            for row in zip(*(pdf[c] for c in cols)):
+                out.extend(fn(*row))
+            yield pd.DataFrame(out, columns=names)
+
+    return df.mapInPandas(gen, schema=schema)
 
 
 def process_doc(doc_id: str, spans) -> dict:
@@ -86,17 +113,6 @@ def process_doc(doc_id: str, spans) -> dict:
     }
 
 
-def _process_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            process_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in S.PIPELINE_OUT_SCHEMA.fields]
-        )
-
-
 def run_pipeline(
     docs: DataFrame,
     salt_partitions: Optional[int] = None,
@@ -110,7 +126,9 @@ def run_pipeline(
             salt_partitions,
             F.pmod(F.xxhash64("doc_id"), F.lit(salt_partitions)),
         )
-    return df.mapInPandas(_process_batches, schema=S.PIPELINE_OUT_SCHEMA)
+    return map_docs(
+        df, lambda d, s: [process_doc(d, s)], S.PIPELINE_OUT_SCHEMA
+    )
 
 
 def roundtrip_doc(doc_id: str, spans) -> dict:
@@ -138,17 +156,6 @@ def roundtrip_doc(doc_id: str, spans) -> dict:
     }
 
 
-def _roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = [
-            roundtrip_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            out, columns=["doc_id", "reload_md5", "stable", "has_chart"]
-        )
-
-
 def doctags_roundtrip(docs: DataFrame) -> DataFrame:
     """DocTags adapter exercised distributedly: serialize -> parse ->
     re-serialize must reach a fixed point after one (lossy, reference-
@@ -157,10 +164,10 @@ def doctags_roundtrip(docs: DataFrame) -> DataFrame:
     reloads to converge (fragment-verified against the reference in
     tools/gen_goldens.py:_check_unstable_ref_faithful; 3/5043 docs at
     sf0.1, 0/503 at sf0.01)."""
-    return docs.mapInPandas(
-        _roundtrip_batches,
-        schema="doc_id string, reload_md5 string, stable boolean,"
-               " has_chart boolean",
+    return map_docs(
+        docs, lambda d, s: [roundtrip_doc(d, s)],
+        "doc_id string, reload_md5 string, stable boolean,"
+        " has_chart boolean",
     )
 
 
@@ -184,27 +191,13 @@ def json_roundtrip_doc(doc_id: str, spans) -> dict:
     }
 
 
-def _json_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = [
-            json_roundtrip_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            out, columns=["doc_id", "json_bytes", "json_md5", "stable"]
-        )
-
-
 def json_roundtrip(docs: DataFrame) -> DataFrame:
     """Reference-schema JSON sink+source exercised distributedly: every
     document must serialize to DoclingDocument JSON and re-ingest with
     an identical markdown export. `stable` must be uniformly true."""
-    return docs.mapInPandas(
-        _json_roundtrip_batches,
-        schema="doc_id string, json_bytes long, json_md5 string,"
-               " stable boolean",
+    return map_docs(
+        docs, lambda d, s: [json_roundtrip_doc(d, s)],
+        "doc_id string, json_bytes long, json_md5 string, stable boolean",
     )
 
 
@@ -258,20 +251,13 @@ VARIANT_EXPORTS_SCHEMA = (
 )
 
 
-def _variant_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [c.split()[0] for c in VARIANT_EXPORTS_SCHEMA.split(",")]
-    for pdf in batches:
-        out = [
-            variant_exports_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(out, columns=cols)
-
-
 def variant_exports(docs: DataFrame) -> DataFrame:
     """Image-mode / split-page / YAML / legacy serializer surfaces as
     one shuffle-free Arrow stage."""
-    return docs.mapInPandas(_variant_batches, schema=VARIANT_EXPORTS_SCHEMA)
+    return map_docs(
+        docs, lambda d, s: [variant_exports_doc(d, s)],
+        VARIANT_EXPORTS_SCHEMA,
+    )
 
 
 CHUNKS_SCHEMA = (
@@ -318,24 +304,6 @@ def chunk_rows_doc(
     ]
 
 
-def _chunk_batches(hybrid: bool, max_tokens: int, with_flag: bool = False):
-    cols = [
-        "doc_id", "chunk_idx", "text", "headings", "item_refs",
-        "n_tokens", "context_tokens",
-    ] + (["needs_text_split"] if with_flag else [])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                out.extend(chunk_rows_doc(
-                    doc_id, spans, hybrid, max_tokens, with_flag
-                ))
-            yield pd.DataFrame(out, columns=cols)
-
-    return gen
-
-
 def chunk_docs(
     docs: DataFrame, hybrid: bool = False, max_tokens: int = 64,
     with_flag: bool = False,
@@ -347,8 +315,10 @@ def chunk_docs(
     schema = CHUNKS_SCHEMA + (
         ", needs_text_split boolean" if with_flag else ""
     )
-    return docs.mapInPandas(
-        _chunk_batches(hybrid, max_tokens, with_flag), schema=schema
+    return map_docs(
+        docs,
+        lambda d, s: chunk_rows_doc(d, s, hybrid, max_tokens, with_flag),
+        schema,
     )
 
 
@@ -370,21 +340,17 @@ def synth_docs(
 
     shape_ids = list(SHAPE_IDS) if include_shapes else []
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                did = (
-                    shape_ids[i]
-                    if i < len(shape_ids)
-                    else f"{prefix}-{i - len(shape_ids):08d}"
-                )
-                out.append({"doc_id": did, "spans": gen_spans(did)})
-            yield pd.DataFrame(out, columns=["doc_id", "spans"])
+    def gen(i) -> list:
+        i = int(i)
+        did = (
+            shape_ids[i]
+            if i < len(shape_ids)
+            else f"{prefix}-{i - len(shape_ids):08d}"
+        )
+        return [{"doc_id": did, "spans": gen_spans(did)}]
 
     total = n + len(shape_ids)
-    return (
-        spark.range(0, total, numPartitions=partitions)
-        .mapInPandas(gen, schema=S.DOCS_SCHEMA)
+    return map_docs(
+        spark.range(0, total, numPartitions=partitions), gen, S.DOCS_SCHEMA,
+        cols=("id",),
     )

@@ -214,7 +214,7 @@ def _rule_errors(obj: dict) -> List[str]:
     # reference_for_document (meta.py:68-79)
     if obj.get("type") == "Document":
         ref = obj.get("$ref")
-        if ref is not None and ref != "ccs:schemas#/Document":
+        if ref and ref != "ccs:schemas#/Document":
             bad.append("$ref")
     return bad
 

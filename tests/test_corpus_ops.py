@@ -845,8 +845,9 @@ def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
     buckets; max_bucket must drop those buckets (their pairs belong to
     exact dedup) while distinct near-dup pairs survive."""
     import pandas as pd
+    from docling_core_spark.corpus import clear
     from docling_core_spark.corpus.dedup import (
-        clear_caches, q_simhash_neardup, q_winnow_overlap,
+        q_simhash_neardup, q_winnow_overlap,
     )
 
     base = " ".join(f"tok{i * 13 % 89}" for i in range(60))
@@ -879,7 +880,7 @@ def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
             (r["doc_a"], r["doc_b"]) == (100, 101) for r in wcap
         )
     finally:
-        clear_caches()
+        clear()
 
 
 def test_pq_codes_structure_and_adc_usefulness(spark):
@@ -1138,14 +1139,14 @@ def test_data_split_partition_and_lineage(spark):
 
 
 def test_split_leakage_only_spanning_clusters(spark):
-    from docling_core_spark.corpus import dedup as CD, splits as SP
+    from docling_core_spark.corpus import clear, dedup as CD, splits as SP
 
-    CD.clear_caches()
+    clear()
     try:
         leaks = SP.q_split_leakage(spark, SF_DIR).collect()
         clusters = CD.q_dedup_clusters(spark, SF_DIR).collect()
     finally:
-        CD.clear_caches()
+        clear()
     sizes = {}
     for r in clusters:
         sizes[r["cluster_id"]] = sizes.get(r["cluster_id"], 0) + 1
@@ -1170,19 +1171,42 @@ def test_domain_quality_consistency(spark):
         assert 0 <= r["dup_ppm"] <= 1_000_000
 
 
+def test_clear_unpersists_every_materialized_table(spark):
+    """`corpus.clear()` unpersists every memoized table — the overlay
+    flattens included — and a cleared table rebuilds to the same rows."""
+    from docling_core_spark.corpus import clear, dedup as CD
+    from docling_core_spark.corpus import similarity as CS
+    from docling_core_spark.ops.overlay import doc_items_df, table_cells_df
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    clear()
+    before = n_persisted()
+    CD.q_neardup_pairs(spark, SF_DIR)
+    CS.q_neardup_cosine(spark, SF_DIR)
+    items = sorted(doc_items_df(spark, 20, partitions=2).collect())
+    table_cells_df(spark, 20, partitions=2)
+    assert n_persisted() > before
+    clear()
+    assert n_persisted() == before
+    assert sorted(doc_items_df(spark, 20, partitions=2).collect()) == items
+    clear()
+
+
 def test_hard_negatives_triplet_invariants(spark):
     """Negatives sit strictly below the dup threshold; when an anchor
     has a positive, every triplet margin is positive (pos >= threshold
     > neg); ranks are dense and ordered by descending neg_cos."""
     from docling_core_spark.corpus import constants as C
     from docling_core_spark.corpus import mining as MI
-    from docling_core_spark.corpus import similarity as CS
+    from docling_core_spark.corpus import clear
 
-    CS.clear_caches()
+    clear()
     try:
         rows = MI.q_hard_negatives(spark, SF_DIR).collect()
     finally:
-        CS.clear_caches()
+        clear()
     assert rows
     by_q = {}
     for r in rows:
@@ -1455,7 +1479,7 @@ def test_containment_pairs_planted_embedded_doc(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from docling_core_spark.corpus import constants as C
-    from docling_core_spark.corpus import dedup as CD
+    from docling_core_spark.corpus import clear, dedup as CD
 
     wire = " ".join(f"wire{i}" for i in range(20))
     page = (
@@ -1474,7 +1498,7 @@ def test_containment_pairs_planted_embedded_doc(spark, tmp_path):
         }),
         tmp_path / "documents.parquet",
     )
-    CD.clear_caches()
+    clear()
     try:
         got = CD.q_containment_pairs(spark, str(tmp_path)).collect()
         assert len(got) == 1
@@ -1487,7 +1511,7 @@ def test_containment_pairs_planted_embedded_doc(spark, tmp_path):
             {p["doc_a"], p["doc_b"]} == {1, 2} for p in sym
         )
     finally:
-        CD.clear_caches()
+        clear()
 
 
 def test_pack_efficiency_invariants(spark, duck):
@@ -1513,7 +1537,7 @@ def test_shingle_novelty_duplicate_contributes_nothing(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from docling_core_spark.corpus import dedup as CD
+    from docling_core_spark.corpus import clear, dedup as CD
 
     a = " ".join(f"alpha{i}" for i in range(30))
     b = " ".join(f"beta{i}" for i in range(30))
@@ -1527,7 +1551,7 @@ def test_shingle_novelty_duplicate_contributes_nothing(spark, tmp_path):
         }),
         tmp_path / "documents.parquet",
     )
-    CD.clear_caches()
+    clear()
     try:
         rows = {r["doc_id"]: r for r in CD.q_shingle_novelty(
             spark, str(tmp_path)).collect()}
@@ -1535,7 +1559,7 @@ def test_shingle_novelty_duplicate_contributes_nothing(spark, tmp_path):
         assert rows[2]["novelty_ppm"] == 0
         assert rows[3]["novelty_ppm"] == 1_000_000
     finally:
-        CD.clear_caches()
+        clear()
 
 
 def test_source_lang_entropy_monolingual_vs_mixed(spark, tmp_path):

@@ -308,9 +308,9 @@ def test_crossdedup_never_self_pairs_old_side(spark):
     """Candidate generation joins new-side bands against old-side bands
     only — the old corpus must not appear on both sides of the join
     (cost scales with the batch, not the corpus)."""
-    from docling_core_spark.corpus import dedup as CD
+    from docling_core_spark.corpus import clear, dedup as CD
 
-    CD.clear_caches()
+    clear()
     try:
         rows = CD.q_crossdedup_lsh(spark, SF).collect()
         assert rows
@@ -322,7 +322,7 @@ def test_crossdedup_never_self_pairs_old_side(spark):
             else:
                 assert r["match_id"] is None and r["n_candidates"] == 0
     finally:
-        CD.clear_caches()
+        clear()
 
 
 def test_bm25_broadcasts_query_vocab(spark):

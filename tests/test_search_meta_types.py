@@ -172,6 +172,21 @@ def test_mutation_verdict_parity(mut, label):
     assert eng_ok == ref_ok, f"{label}: eng={eng_ok} ({msg})"
 
 
+@pytest.mark.parametrize("ref,rejected", [
+    ("cps:schemas#/Record", True),
+    ("", False),
+    (None, False),
+    ("ccs:schemas#/Document", False),
+])
+def test_document_ref_truthiness(ref, rejected):
+    """reference_for_document (meta.py:68-79) rejects only a TRUTHY
+    wrong $ref; a falsy one is coerced to the pinned value."""
+    from docling_core_spark.search.meta_schema import _rule_errors
+
+    obj = {"type": "Document", "$ref": ref}
+    assert ("$ref" in _rule_errors(obj)) == rejected
+
+
 def test_multi_extra_error_field_parity():
     """Several extra keys + a missing field in one payload: the engine's
     error-field sequence must match Pydantic's (extras first in payload

@@ -49,6 +49,13 @@ def test_content_preserved(words, budget):
     assert bag("".join(out)) == bag(text)
 
 
+def test_unsplittable_character_over_budget():
+    """A counter that prices every piece above the budget (an encode()
+    that adds special tokens) must not recurse forever: a character
+    that cannot be split further is emitted as it is."""
+    assert semsplit_chunk("ab", 1, lambda s: len(s) + 2) == ["a", "b"]
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.text(alphabet="ab.\n\t ?", min_size=1, max_size=80))
 def test_split_text_reconstructs(text):

@@ -95,7 +95,7 @@ def run_dedup_at(cpus: int) -> dict:
     Jaccard joins) over the inflated near-duplicate corpus. Complements
     the shuffle-free pipeline in the scaling evidence: the banding
     shuffle and candidate joins must also scale with worker count."""
-    from docling_core_spark.corpus import clear_all_caches, dedup as CD
+    from docling_core_spark.corpus import clear, dedup as CD
 
     _inflate_docs()
     spark = _session(cpus)
@@ -105,9 +105,8 @@ def run_dedup_at(cpus: int) -> dict:
         ).count()
         best = None
         for _ in range(2):
-            # full recompute each run, no leaked RDDs (similarity's
-            # banded/IVF caches share the same leak class)
-            clear_all_caches()
+            # full recompute each run, no leaked RDDs
+            clear()
             t0 = time.time()
             n_pairs = CD.q_neardup_pairs(spark, _DEDUP_SCALE_DIR).count()
             dt = time.time() - t0

@@ -1,6 +1,11 @@
 """Simulate the driver's correctness gate: run each queries() entry on
 Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
-count, sorted column names, and order-insensitive value multiset."""
+count, sorted column names, and order-insensitive value multiset.
+
+    python tools/check_correctness.py [SF_DIR] [NAME,NAME,...]
+
+The optional second argument is a comma-separated list of exact query
+names; an unknown name is an error. Exits 1 unless every row MATCHes."""
 import os
 import sys
 
@@ -42,6 +47,13 @@ def normalize(rows, cols):
 def main(sf_dir="/root/testdata/sf0.01", only=None):
     import __spark_entry__ as E
 
+    qs = E.queries()
+    if only:
+        names = [n for n in only.split(",") if n]
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            sys.exit(f"unknown query names: {', '.join(unknown)}")
+        qs = {n: qs[n] for n in qs if n in names}
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .config("spark.sql.shuffle.partitions", "16")
@@ -56,12 +68,9 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs = E.queries()
     oracles = E.oracle_sql()
     results = {}
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             df = fn(spark, sf_dir)
             rows = df.collect()
@@ -94,7 +103,10 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
     for k, v in results.items():
         print(f"{k:28s} {v}")
     spark.stop()
+    bad = [k for k, v in results.items() if not v.startswith("MATCH")]
+    print(f"{len(results) - len(bad)}/{len(results)} MATCH")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main(*(sys.argv[1:] or []))
+    sys.exit(main(*sys.argv[1:]))

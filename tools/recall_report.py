@@ -58,8 +58,8 @@ def main(sfs) -> None:
                 f" {sum(recalls) / len(recalls):.3f}"
                 f" over {len(recalls)} queries"
             )
-        from docling_core_spark.corpus import clear_all_caches
-        clear_all_caches()
+        from docling_core_spark.corpus import clear
+        clear()
     spark.stop()
 
 
